@@ -908,8 +908,9 @@ FROM ranked WHERE rank <= {k}
 
 def _q_greedy_match_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The skew path: salt_cap_pairs=8 forces virtually every kernel
-    block through the hash-split (nsplit=16) branch — the oracle is the
-    UNCHANGED sequential greedy CTE, proving salting is exact."""
+    block through the round-0 weighted range cut (16 chunks per block) —
+    the oracle is the UNCHANGED sequential greedy CTE, proving the split
+    is exact."""
     ds, osm = _derived_points(spark, sf_dir)
     cfg = ConflateConfig(duplicate_distance=0.001, salt_cap_pairs=8)
     pipe = ConflatePipeline(spark, cfg)
@@ -929,7 +930,7 @@ _CFG_DIST = ConflateConfig(
 def _q_conflate_changes_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full pipeline with REAL spatial dedup (50 m — thousands of dup
     pairs on the derived clusters) forced through the DISTRIBUTED D2
-    fixpoint (driver_max_pairs=0); oracle replays dedup + greedy +
+    fixpoint (dedup_driver_max_pairs=0); oracle replays dedup + greedy +
     change rules sequentially."""
     ds, osm = _derived_points(spark, sf_dir)
     res = ConflatePipeline(spark, _CFG_DIST).run(ds, osm)

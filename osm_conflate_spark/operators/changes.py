@@ -131,9 +131,10 @@ def build_changes(
     # modify+create, the unmatched-OSM frame for delete+retag) are
     # truncated with a LAZY localCheckpoint instead: all consumers then
     # reference one RDD, its stages run once, and nothing executes until
-    # the caller's first action (no caching across invocations — each
-    # build_changes call makes a fresh frame, freed by the session's
-    # unpersist sweep).
+    # the caller's first action.  Each build_changes call makes two
+    # fresh checkpointed frames that stay persisted until the session
+    # ends, unless the caller unpersists them (a long-lived session that
+    # calls the pipeline repeatedly has to sweep them itself).
     ds_p = ds.select(
         F.col("id").alias("dataset_id"), "lat", "lon", "tags"
     )

@@ -106,6 +106,8 @@ class ConflatePipeline:
                 F.col("id").alias("dataset_id"), _negw("tags").alias("negw")
             )
             pairs = pairs.join(wdf, "dataset_id")
+        else:
+            pairs = pairs.withColumn("negw", F.lit(0.0))
         if audit is not None:
             skips = F.broadcast(
                 audit.where(F.col("skip")).select(F.col("dataset_id"))
@@ -119,7 +121,7 @@ class ConflatePipeline:
                      n_out=g["n_matched"], wall_ms=g["wall_ms"], resumed=False)
             )
         # skew-guard evidence: which blocks exceeded salt_cap_pairs and
-        # were hash-split (n_in = the pre-split pair count)
+        # were range-cut (n_in = the pre-split pair count)
         for srec in stats.get("salt_splits", []):
             self.runner.lineage.append(
                 dict(stage="salt_split", group_id=srec["block"],

@@ -69,7 +69,8 @@ for rep in range(2):
     print("pairs:", prepared.count(), flush=True)
     from osm_conflate_spark.operators.match import greedy_match
     stats = {}
-    m = step("j2_greedy", lambda: (lambda r: (r, r.count()))(greedy_match(spark, prepared, cfg, stats=stats))[0])
+    unweighted = prepared.withColumn("negw", F.lit(0.0))  # as pipeline.match without a weight hook
+    m = step("j2_greedy", lambda: (lambda r: (r, r.count()))(greedy_match(spark, unweighted, cfg, stats=stats))[0])
     print("rounds:", stats.get("rounds"), "live:", stats.get("live_per_round"), flush=True)
     for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
         rdd.unpersist()

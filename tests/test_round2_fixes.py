@@ -151,15 +151,12 @@ def test_spatial_dedup_driver_path(spark):
 
 
 def test_spatial_dedup_distributed_path_matches_driver(spark):
-    """driver_max_pairs=0 forces the distributed fixpoint (the path that
-    protects the driver from adversarial dup volumes) — must produce the
-    exact same keep set."""
+    """dedup_driver_max_pairs=0 forces the distributed fixpoint (the path
+    that protects the driver from adversarial dup volumes) — must produce
+    the exact same keep set."""
     ds = _dup_ds(spark)
-    cfg = ConflateConfig(duplicate_distance=1.0)
-    keep = sorted(
-        r["id"]
-        for r in dd.spatial_dedup(ds, cfg, driver_max_pairs=0).collect()
-    )
+    cfg = ConflateConfig(duplicate_distance=1.0, dedup_driver_max_pairs=0)
+    keep = sorted(r["id"] for r in dd.spatial_dedup(ds, cfg).collect())
     assert keep == _EXPECTED_KEEP
 
 

@@ -4,8 +4,8 @@
   deferred set — no empty trailing kernel round, and ``live_per_round``
   reports exact POST-kill counts (round-3 ADVICE #1 / round-4 verdict
   #3);
-* ``salt_deferred`` typos raise instead of silently selecting the
-  measured-worst id-hash policy (round-4 ADVICE).
+* ``greedy_match`` takes exactly the prepared pair table: a table
+  without ``ds_cell`` raises instead of switching split policy.
 """
 
 import pandas as pd
@@ -48,6 +48,7 @@ def test_fully_killed_deferred_set_ends_loop(spark, monkeypatch):
                 "dist": [1.0, 2.0],
                 "negw": [0.0, 0.0],
                 "block": pd.array([b0, b1], dtype="int64"),
+                "ds_cell": pd.array([b0, b1], dtype="int64"),
             }
         )
     )
@@ -84,6 +85,7 @@ def test_driver_finish_sees_post_kill_set(spark, monkeypatch):
                 "dist": [1.0, 2.0, 0.5, 3.0, 4.0],
                 "negw": [0.0] * 5,
                 "block": pd.array([b0, b1, b0, b0, b1], dtype="int64"),
+                "ds_cell": pd.array([b0, b1, b0, b0, b1], dtype="int64"),
             }
         )
     )
@@ -97,13 +99,25 @@ def test_driver_finish_sees_post_kill_set(spark, monkeypatch):
     assert stats["live_per_round"] == [5, 1], stats
 
 
-def test_salt_deferred_typo_rejected():
-    """Round-4 ADVICE: a typo like 'rangecut' must raise, not silently
-    fall through to the id-hash strategy."""
-    with pytest.raises(ValueError, match="salt_deferred"):
-        ConflateConfig(salt_deferred="rangecut")
-    for ok in ("off", "range_cut", "id_hash"):
-        ConflateConfig(salt_deferred=ok)
+def test_greedy_match_requires_ds_cell(spark):
+    """Pairs without the ``ds_cell`` column the range cut splits on are
+    not the prepared pair table: reject them rather than match with a
+    different skew policy."""
+    from pyspark.errors import AnalysisException
+
+    pairs = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "dataset_id": ["A"],
+                "osm_pk": ["node/1"],
+                "dist": [1.0],
+                "negw": [0.0],
+                "block": pd.array([0], dtype="int64"),
+            }
+        )
+    )
+    with pytest.raises(AnalysisException, match="ds_cell"):
+        greedy_match(spark, pairs, ConflateConfig())
 
 
 # --------------------------------------------------------------------------

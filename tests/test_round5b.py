@@ -210,6 +210,7 @@ _MESSY_URLS = [
     "http://a.com:8080/",
     "https://a.com/#only-fragment",
     "http://x@b.net/q?y#f",
+    "http://a.com/p?x=1?y=2",
 ]
 
 
